@@ -173,18 +173,19 @@ object LabelPropagation {
         .agg(max(struct($"cnt", (-$"label").as("neg_label"))).as("m"))
         .select($"id", (-$"m.neg_label").as("new_label"))
       if (config.earlyStop) {
-        val next = labels
-          .join(maybeBroadcast(mode), Seq("id"), "left")
-          .select($"id", coalesce($"new_label", $"label").as("label"),
-            // carried flag: convergence check = filter over materialized
-            // state, not a second vertex-vertex join per round.
-            (coalesce($"new_label", $"label") =!= $"label").as("chg"))
-          .transform(StatsReset.checkpointNoStats)
-        changed = next.filter($"chg").count()
+        // the changed count is observed by the checkpoint job itself:
+        // no second vertex-vertex join and no count action per round.
+        val (next, probe) = StatsReset.checkpointObserved(
+          labels
+            .join(maybeBroadcast(mode), Seq("id"), "left")
+            .select($"id", coalesce($"new_label", $"label").as("label"),
+              (coalesce($"new_label", $"label") =!= $"label").as("chg")),
+          count(when($"chg", lit(1))))
+        changed = probe.getLong(0)
         labels = next.select($"id", $"label")
       } else {
         // fixed-iteration mode (the PageRank pattern, round-1 verdict #6):
-        // no changed-count job, supersteps chain LAZILY into fused Catalyst
+        // no changed count, so supersteps chain LAZILY into fused Catalyst
         // jobs; truncate lineage every few rounds to keep planning cheap.
         // A labeling that reaches its fixed point inside the budget is
         // unchanged by the extra rounds, so results match earlyStop runs.
@@ -200,9 +201,7 @@ object LabelPropagation {
         // reuse); in broadcast mode nested broadcast builds re-execute
         // their subtree with no cross-build reuse — measured ~2^k per
         // action on the same round shape (Wcc.scala batch policy /
-        // BASELINE.md). The broadcast-mode round is still "fused" in the
-        // round-1 #6 sense: no changed-count job, just the one
-        // materialization.
+        // BASELINE.md), so broadcast mode materializes every round.
         labels =
           if (doBroadcast || (iteration + 1) % 5 == 0 ||
               iteration + 1 == config.maxIterations)

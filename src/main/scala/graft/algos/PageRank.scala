@@ -3,6 +3,7 @@ package graft.algos
 import graft.{ConvergenceStats, PageRankConfig}
 import graft.checkpoint.Checkpointer
 import graft.graph.LinkGraph
+import org.apache.spark.sql.graft.StatsReset
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -41,14 +42,20 @@ import org.apache.spark.storage.StorageLevel
   *    shuffle; optional `gatherSalt` > 1 splits heavy srcs across
   *    partitions via virtual ids — the distributed counterpart of the
   *    reference's degree-balanced work ranges (graph_ops.rs:331-440).
-  *  - scatter: cached dense degree table LEFT JOIN gathered -> next state.
-  *  - the whole vertex path is hash-aligned: degrees cached hash(id), the
-  *    gather aggregate lands hash(id), the scatter join is co-partitioned,
-  *    and the next senders meet the hash(src) edge cache in place — a
-  *    shuffle-mode superstep executes as ONE stage whose only shuffle is
-  *    the partial-aggregated gather output.
-  *  - the convergence error is a separate tiny job over two cached states;
-  *    in fixed-iteration mode (tolerance <= 0) it is skipped entirely and
+  *  - scatter: cached dense degree table LEFT JOIN gathered -> next state
+  *    (convergence mode: the previous state, which carries out_deg, LEFT
+  *    JOIN gathered, so each row holds its new and previous score).
+  *  - in fixed-iteration mode the whole vertex path is hash-aligned:
+  *    degrees cached hash(id), the gather aggregate lands hash(id), the
+  *    scatter join is co-partitioned, and the next senders meet the
+  *    hash(src) edge cache in place — a shuffle-mode superstep executes as
+  *    ONE stage whose only shuffle is the partial-aggregated gather output.
+  *    (A checkpointed convergence-mode state has no known partitioning, so
+  *    its scatter also exchanges the vertex-sized state.)
+  *  - the convergence error is summed by the job that checkpoints the new
+  *    state (StatsReset.checkpointObserved), the reference's one-pass
+  *    score-and-error loop (page_rank.rs:152-153) — no job of its own; in
+  *    fixed-iteration mode (tolerance <= 0) it is skipped entirely and
   *    supersteps chain lazily into one fused Catalyst job.
   * Eager localCheckpoint truncates plan lineage per superstep
   * (SURVEY.md §7.4-5); every `checkpointEvery` iterations the state is also
@@ -91,6 +98,12 @@ object PageRank {
       else math.min(16, math.max(2,
         math.ceil(2.0 * maxSrcRows / perPart).toInt))
     }
+
+  /** Convergence-mode probe: L1 distance between the `score` and `prev`
+    * columns of a scatter output; 0.0 over no rows (SQL sum is null).
+    */
+  private[graft] val l1Error =
+    coalesce(sum(abs(col("score") - col("prev"))), lit(0.0)).as("error")
 
   def run(
       graph: LinkGraph,
@@ -162,9 +175,6 @@ object PageRank {
       .persist(StorageLevel.MEMORY_AND_DISK)
     degrees.count()
 
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (doBroadcast) broadcast(df) else df
-
     // Stale-checkpoint guard, computed only when checkpointing is on
     // (edgeCount is a job). The fingerprint carries only STATE-determining
     // facts (damping, graph): a checkpoint at iteration k is valid for any
@@ -220,25 +230,32 @@ object PageRank {
           joinKey)
         .groupBy(edges("dst").as("id"))
         .agg(sum($"cnt" * $"out_score").as("in_sum"))
-      // scatter: both sides arrive hash-partitioned by id (cached degrees,
-      // aggregate output) — shuffle_hash joins them in place instead of a
-      // per-superstep driver broadcast of `gathered`.
-      val next = degrees
-        .join(gathered.hint("shuffle_hash"), Seq("id"), "left")
-        .select($"id",
-          (lit(baseScore) + lit(d) * coalesce($"in_sum", lit(0.0)))
-            .as("score"),
-          $"out_deg")
+      val newScore =
+        (lit(baseScore) + lit(d) * coalesce($"in_sum", lit(0.0))).as("score")
 
       if (trackError) {
-        // convergence mode: the error action materializes every superstep
-        // anyway, so truncate lineage eagerly each round.
-        val mat = next.localCheckpoint()
-        error = mat.as("n").join(state.as("p"), Seq("id"))
-          .agg(sum(abs($"n.score" - $"p.score"))).first().getDouble(0)
+        // convergence mode: the scatter reads the previous state (it
+        // carries out_deg), so every row holds its new and previous score
+        // and the L1 error is an aggregate observed by the checkpoint job
+        // that materializes the next state — no error join of consecutive
+        // states and no action of its own (about half of a superstep's
+        // jobs before). Statistics are truncated: the state now meets
+        // itself through the gather, so carried size estimates would
+        // compound per superstep (StatsReset).
+        val (mat, probe) = StatsReset.checkpointObserved(
+          state.join(gathered.hint("shuffle_hash"), Seq("id"), "left")
+            .select($"id", newScore, $"out_deg", $"score".as("prev")),
+          l1Error)
+        error = probe.getDouble(0)
         converged = error < config.tolerance
-        state = mat
+        state = mat.select($"id", $"score", $"out_deg")
       } else {
+        // scatter: both sides arrive hash-partitioned by id (cached
+        // degrees, aggregate output) — shuffle_hash joins them in place
+        // instead of a per-superstep driver broadcast of `gathered`.
+        val next = degrees
+          .join(gathered.hint("shuffle_hash"), Seq("id"), "left")
+          .select($"id", newScore, $"out_deg")
         // fixed-iteration mode: chain supersteps LAZILY (state appears once
         // per level -> linear plan growth) and let Catalyst fuse the whole
         // sequence into one job; truncate lineage every few rounds to keep

@@ -30,9 +30,10 @@ import org.apache.spark.sql.functions._
   *     It doubles progress wherever labels form decreasing chains; when
   *     ids run against edge direction it degrades to one hop per round, so
   *     the bound is O(diameter) rounds (the standard Pregel-SCC bound —
-  *     shallow on real link graphs). Rounds chain lazily in batches of 4
-  *     per Spark action, so the per-round cost is a quarter of a
-  *     changed-count + localCheckpoint cycle.
+  *     shallow on real link graphs). In shuffle mode rounds chain lazily
+  *     in batches of 4 per Spark action, so the per-round cost is a
+  *     quarter of a localCheckpoint cycle (whose job also counts the
+  *     changed labels).
   *  3. BACKWARD labels: the same propagation along reversed edges,
   *     bwd(v) = min id over {u : v reaches u} ∪ {v}.
   *  4. CLAIM: fwd(v) = bwd(v) = r  <=>  v and r are mutually reachable and
@@ -133,10 +134,12 @@ object Scc {
               least(col(s"$a.lbl"), coalesce($"jlbl", col(s"$a.lbl")))
                 .as("lbl"))
         }
-        val stepped = cur.join(maybeBroadcast(start), Seq("id"))
-          .select($"id", $"lbl", ($"lbl" =!= $"prev").as("chg"))
-          .transform(StatsReset.checkpointNoStats)
-        changed = stepped.filter($"chg").count()
+        // the changed count rides the batch's checkpoint job
+        val (stepped, probe) = StatsReset.checkpointObserved(
+          cur.join(maybeBroadcast(start), Seq("id"))
+            .select($"id", $"lbl", ($"lbl" =!= $"prev").as("chg")),
+          count(when($"chg", lit(1))))
+        changed = probe.getLong(0)
         lbl = stepped.select($"id", $"lbl")
         rounds += thisBatch
         batches += 1
@@ -198,20 +201,22 @@ object Scc {
     }
 
     while (remaining > 0 && iteration < config.maxIterations) {
-      // ---- TRIM to fixed point (one checkpoint + one count per peel:
-      // flag every active vertex with has-in AND has-out, then read both
-      // the survivors and the trimmed singletons off the materialized df)
+      // ---- TRIM to fixed point (one checkpoint per peel, which also
+      // counts the trimmed: flag every active vertex with has-in AND
+      // has-out, then read both the survivors and the trimmed singletons
+      // off the materialized df)
       var trimming = true
       while (trimming && remaining > 0) {
-        val flagged = active
-          .join(activeEdges.select($"src".as("id"), lit(true).as("has_out"))
-            .dropDuplicates("id"), Seq("id"), "left")
-          .join(activeEdges.select($"dst".as("id"), lit(true).as("has_in"))
-            .dropDuplicates("id"), Seq("id"), "left")
-          .select($"id",
-            ($"has_out".isNotNull && $"has_in".isNotNull).as("keep"))
-          .transform(StatsReset.checkpointNoStats)
-        val tCount = flagged.filter(!$"keep").count()
+        val (flagged, probe) = StatsReset.checkpointObserved(
+          active
+            .join(activeEdges.select($"src".as("id"), lit(true).as("has_out"))
+              .dropDuplicates("id"), Seq("id"), "left")
+            .join(activeEdges.select($"dst".as("id"), lit(true).as("has_in"))
+              .dropDuplicates("id"), Seq("id"), "left")
+            .select($"id",
+              ($"has_out".isNotNull && $"has_in".isNotNull).as("keep")),
+          count(when(!$"keep", lit(1))))
+        val tCount = probe.getLong(0)
         if (debug) println(s"[scc] outer=$iteration trim=$tCount " +
           s"remaining=$remaining")
         if (tCount == 0) trimming = false
@@ -248,12 +253,13 @@ object Scc {
             s"(fwd=$fwdFixed bwd=$bwdFixed) — aborting without claims")
           iteration = config.maxIterations
         } else {
-          val claimed = fwd
-            .join(bwd.withColumnRenamed("lbl", "blbl"), Seq("id"))
-            .where($"lbl" === $"blbl")
-            .select($"id", $"lbl".as("scc"))
-            .transform(StatsReset.checkpointNoStats)
-          val cCount = claimed.count()
+          val (claimed, probe) = StatsReset.checkpointObserved(
+            fwd
+              .join(bwd.withColumnRenamed("lbl", "blbl"), Seq("id"))
+              .where($"lbl" === $"blbl")
+              .select($"id", $"lbl".as("scc")),
+            count(lit(1)))
+          val cCount = probe.getLong(0)
           if (debug) println(s"[scc] outer=$iteration claimed=$cCount " +
             s"remaining=${remaining - cCount}")
           resolved += claimed

@@ -145,8 +145,7 @@ object Sssp {
     //    (ReuseExchange dedupes the repeated subtrees);
     //  - BROADCAST mode materializes EVERY round (nested broadcast builds
     //    re-execute their lazy subtrees with no cross-build reuse — the
-    //    measured ~2^batch pathology) but still amortizes the probe
-    //    action over the batch.
+    //    measured ~2^batch pathology) but still probes once per batch.
     // A FINITE delta keeps per-round probes: the band-advance decision is
     // a driver-side branch that cannot be chained lazily.
     val batch =
@@ -181,20 +180,26 @@ object Sssp {
         require(bcastLazy >= 1,
           s"SSSP bcastLazy cadence must be >= 1, got $bcastLazy")
         var cur = state
+        var pending = 0L
         for (i <- 0 until rounds) {
           cur = relaxRound(cur, Double.PositiveInfinity, i)
           // eager localCheckpoint truncates plan lineage (SURVEY.md
           // §7.4-5): per `bcastLazy` rounds in broadcast mode, once per
-          // batch in shuffle mode
-          if ((doBroadcast && (i + 1) % bcastLazy == 0) || i == rounds - 1)
+          // batch in shuffle mode. The batch's LAST checkpoint job also
+          // counts the still-pending vertices — the one convergence probe
+          // per batch, with no action of its own.
+          if (i == rounds - 1) {
+            val (mat, probe) = StatsReset.checkpointObserved(cur,
+              count(when($"pending", lit(1))))
+            cur = mat
+            pending = probe.getLong(0)
+          } else if (doBroadcast && (i + 1) % bcastLazy == 0)
             cur = cur.transform(StatsReset.checkpointNoStats)
         }
         state = cur
         iteration += rounds
-        // ONE probe action per BATCH over the materialized state: any
-        // vertex still pending means another batch is needed.
-        done = state.agg(count(when($"pending", 1)))
-          .first().getLong(0) == 0L
+        // any vertex still pending means another batch is needed
+        done = pending == 0L
         if (checkpointDir.isDefined && !done
             && iteration % checkpointEvery == 0
             && iteration < config.maxIterations) {

@@ -190,7 +190,7 @@ object Wcc {
       if (contractAt > iteration)
         rounds = math.min(rounds, contractAt - iteration)
       // batch-start comp rides along as `prev` so the convergence check is
-      // a flag-filter over the materialized state (round-1 verdict #6), now
+      // a count over the rows being materialized (round-1 verdict #6), now
       // amortized over the whole batch.
       var cur = comp.select($"id", $"comp", $"comp".as("prev"))
       for (i <- 0 until rounds) {
@@ -214,14 +214,12 @@ object Wcc {
             least(col(s"$a.comp"), coalesce($"jcomp", col(s"$a.comp")))
               .as("comp"))
       }
-      val stepped = cur
-        .select($"id", $"comp", ($"comp" =!= $"prev").as("chg"))
-        .transform(StatsReset.checkpointNoStats)
-
-      // ONE action per batch serves both the convergence check and the
-      // auto-contraction rule: total state rows + changed rows.
-      val counts = stepped
-        .agg(count(lit(1)), count(when($"chg", lit(1)))).first()
+      // the batch's checkpoint job also counts total state rows and
+      // changed rows — the convergence check and the auto-contraction
+      // rule cost no action of their own.
+      val (stepped, counts) = StatsReset.checkpointObserved(
+        cur.select($"id", $"comp", ($"comp" =!= $"prev").as("chg")),
+        count(lit(1)), count(when($"chg", lit(1))))
       val stateRows = counts.getLong(0)
       changed = counts.getLong(1)
 

@@ -55,11 +55,13 @@ case class WccConfig(maxIterations: Int = 200, contractAfter: Int = -1)
   * are synchronous LPA (Raghavan et al.) with deterministic smallest-label
   * tie-break so results are exact at convergence.
   *
-  * `earlyStop = false` pins the run to exactly `maxIterations` supersteps and
-  * skips the per-round changed-count job entirely: supersteps chain lazily
-  * into fused Catalyst jobs (the PageRank fixed-iteration pattern). Results
-  * are identical whenever the labeling reaches a fixed point within the
-  * budget (a fixed point is stable under further LPA rounds).
+  * `earlyStop = true` counts changed labels each superstep, inside the job
+  * that checkpoints the new labels, and stops at the first round with none.
+  * `earlyStop = false` pins the run to exactly `maxIterations` supersteps
+  * and computes no changed count, so in shuffle mode supersteps chain
+  * lazily into fused Catalyst jobs (the PageRank fixed-iteration pattern).
+  * Results are identical whenever the labeling reaches a fixed point within
+  * the budget (a fixed point is stable under further LPA rounds).
   */
 case class LabelPropagationConfig(
     maxIterations: Int = 20,
@@ -95,9 +97,10 @@ case class SccConfig(
   * relaxations on high-diameter weighted graphs.
   *
   * `roundBatch` -1 = auto: with infinite delta, 4 relax rounds per
-  * convergence-probe action (lazily fused in shuffle mode, materialized
-  * per round in broadcast mode — the WCC/LP/SCC batch policy); finite
-  * delta always probes per round (the band advance is a driver-side
+  * convergence probe, which the batch's last checkpoint job counts (rounds
+  * lazily fused in shuffle mode, materialized per round in broadcast
+  * mode — the WCC/LP/SCC batch policy); finite delta always probes per
+  * round with its own action (the band advance is a driver-side
   * decision). Min-plus relaxation past frontier exhaustion is a no-op, so
   * any batch size reaches the identical fixed point; only the reported
   * iteration count may round up to the probe boundary.

@@ -192,6 +192,28 @@ object Curation {
         explode(sequence(lit(1L), col("copies"))).as("copy"))
   }
 
+  /** packSequences' default range-partition count (round-6, same
+    * principle as LinkGraph.adaptiveParts): `spark.sql.shuffle.partitions`
+    * is a CAP; a corpus with fewer input splits than that doesn't need 32
+    * range partitions, 32 window tasks and a 32-slot offset array per run.
+    * At scale the split count exceeds the cap and the configured value
+    * wins. Sized by Parallelism.estimatedSplits, not
+    * docs.rdd.getNumPartitions: the rdd probe finalizes an AQE plan
+    * (executing upstream stages of a derived input just to read a count);
+    * the stats estimate is driver-only. A stats-less input (a checkpointed
+    * frame) would estimate at the cap, so it is sized from its row count
+    * instead, as Dedup.dupGroups sizes its pair graph — one job over the
+    * materialized partitions; the packed projection is two longs a row.
+    */
+  private[graft] def packPartitions(docs: DataFrame): Int = {
+    val cap = docs.sparkSession.conf
+      .get("spark.sql.shuffle.partitions", "32").toInt
+    if (graft.util.Parallelism.statsLess(docs))
+      graft.graph.LinkGraph.adaptivePartsForRows(docs.count(), cap)
+    else math.min(cap,
+      math.max(8, graft.util.Parallelism.estimatedSplits(docs, cap)))
+  }
+
   /** Sequence packing — assign documents to fixed-token-budget bins
     * (training context windows) in stable `doc_id` order: a document's bin
     * is `floor(excl_cumsum(n_tokens) / budget)` where the exclusive cumsum
@@ -213,18 +235,7 @@ object Curation {
       numPartitions: Int = 0): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     val spark = docs.sparkSession
-    // scale-adaptive partition count (round-6, same principle as
-    // LinkGraph.adaptiveParts): the configured value is a CAP; a corpus
-    // with fewer input splits than that doesn't need 32 range partitions,
-    // 32 window tasks and a 32-slot offset array per run. At scale the
-    // split count exceeds the cap and the configured value wins.
-    // estimatedSplits, not docs.rdd.getNumPartitions: the rdd probe
-    // finalizes an AQE plan (executing upstream stages of a derived
-    // input just to read a count); the stats estimate is driver-only
-    val cap = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val p = if (numPartitions > 0) numPartitions
-      else math.min(cap,
-        math.max(8, graft.util.Parallelism.estimatedSplits(docs, cap)))
+    val p = if (numPartitions > 0) numPartitions else packPartitions(docs)
     // widen before the tokenize projection: on a single-split input the
     // whole tokenCount pass otherwise serializes into one task (guide §2.5)
     val sized = graft.util.Parallelism.widen(docs).select(col("doc_id"),

@@ -13,19 +13,21 @@ import org.apache.spark.sql.DataFrame
   * downstream row-local transform (shingling, per-shingle md5, signature
   * aggregation) serializes into a single task no matter how many cores the
   * session has — measured 2.6 s single-task shingle+hash jobs at sf0.1
-  * against ~0.1 s spread over 32 cores. At 100 TB the input has orders of
-  * magnitude more splits than cores and [[widen]] is the identity: the
-  * branch can only ever ADD an exchange of a provably tiny input, never a
-  * shuffle of a large one.
+  * against ~0.1 s spread over 32 cores. An input of a few splits caps the
+  * stage at that many cores the same way. At 100 TB the input has orders
+  * of magnitude more splits than cores and [[widen]] is the identity: the
+  * branch can only ever ADD an exchange of an input estimated below one
+  * split per core, never a shuffle of a large one.
   *
-  * The decision reads `optimizedPlan.stats.sizeInBytes` — pure driver-side
-  * plan metadata. The first round-6 form probed `df.rdd.getNumPartitions`,
-  * which under AQE (on by default) FINALIZES the adaptive plan: every
-  * upstream shuffle stage of a derived input executes eagerly just to read
-  * a partition count, and then the real pipeline re-executes them in a
-  * fresh query execution. Stats-less inputs (checkpointed frames report
-  * defaultSizeInBytes) read as huge and take the do-nothing branch — the
-  * guard only ever engages on a provably small input.
+  * The decision reads `optimizedPlan.stats.sizeInBytes` and the physical
+  * plan's output partitioning — pure driver-side plan metadata. The first
+  * round-6 form probed `df.rdd.getNumPartitions`, which under AQE (on by
+  * default) FINALIZES the adaptive plan: every upstream shuffle stage of a
+  * derived input executes eagerly just to read a partition count, and then
+  * the real pipeline re-executes them in a fresh query execution. Stats-less
+  * inputs (checkpointed frames report defaultSizeInBytes) read as huge and
+  * take the do-nothing branch — the guard only ever engages on a provably
+  * small input.
   */
 object Parallelism {
 
@@ -36,14 +38,29 @@ object Parallelism {
     JavaUtils.byteStringAsBytes(df.sparkSession.conf
       .get("spark.sql.files.maxPartitionBytes", "128m"))
 
-  /** Round-robin repartition `df` up to the session's default parallelism
-    * when (and only when) its size estimate says it arrives as a single
-    * scan split.
+  /** True when the optimizer has no size estimate for `df` (it reports
+    * `spark.sql.defaultSizeInBytes`, e.g. a checkpointed frame), so the
+    * stats-based sizing rules cannot see how small it is.
     */
-  def widen(df: DataFrame): DataFrame =
-    if (statsBytes(df) < BigInt(maxSplitBytes(df)))
-      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+  def statsLess(df: DataFrame): Boolean =
+    statsBytes(df) >= BigInt(JavaUtils.byteStringAsBytes(df.sparkSession
+      .conf.get("spark.sql.defaultSizeInBytes", Long.MaxValue.toString)))
+
+  /** Round-robin repartition `df` up to the session's default parallelism
+    * when its size estimate says it arrives as fewer scan splits than
+    * there are cores, unless its physical plan already fixes at least that
+    * many output partitions (an upstream `repartition(n)`, a cached frame).
+    * Inputs whose partition count the plan leaves open — file scans, and
+    * shuffles that adaptive execution may still coalesce — are judged by
+    * the estimate alone.
+    */
+  def widen(df: DataFrame): DataFrame = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    if (estimatedSplits(df, cores) < cores &&
+        df.queryExecution.sparkPlan.outputPartitioning.numPartitions < cores)
+      df.repartition(cores)
     else df
+  }
 
   /** Driver-side estimate of the scan-split count `df` arrives as,
     * clamped to [1, cap] — the stats-based replacement for

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
 
 /** Minimal internal-API shim (the one place the engine reaches past the
@@ -36,4 +36,25 @@ object StatsReset {
     */
   def checkpointNoStats(df: DataFrame): DataFrame =
     freshStats(df.localCheckpoint())
+
+  /** [[checkpointNoStats]] that also returns the aggregate metrics over the
+    * checkpointed rows, computed by the same job that materializes them —
+    * the convergence probe of an iterative algorithm costs no action of
+    * its own. The observation sits directly under the eager checkpoint,
+    * so its aggregate sees exactly the rows the returned frame holds; the
+    * returned frame carries no observation (later actions on it do not
+    * re-fire it). The row is read from the checkpoint's own query
+    * execution once the job has returned, not from a listener event that
+    * the caller would have to wait for. Aggregates over no rows follow
+    * SQL: count is 0, sum is null.
+    */
+  def checkpointObserved(df: DataFrame, metric: Column, more: Column*)
+      : (DataFrame, Row) = {
+    val observed = df.observe(ProbeName, metric, more: _*)
+    val cp = freshStats(observed.localCheckpoint())
+    (cp, observed.asInstanceOf[ClassicDataset[_]].queryExecution
+      .observedMetrics(ProbeName))
+  }
+
+  private val ProbeName = "graft_probe"
 }

@@ -331,6 +331,42 @@ class CatalogServerSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("COMPUTE page_rank reports the convergence stats of PageRank.run") {
+    // the error is observed by each superstep's checkpoint job; the
+    // daemon's per-call unpersist sweep must not lose or skew it
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-serve-pr").toString
+    val cat = new GraphCatalog(new ParquetTableIO(s"$root/cat"))
+    graft.fixtures.Fixtures.randomEdges(120, 700, 42L)
+      .map { case (u, v) => (u, v, 1.0) }
+      .toDF("src", "dst", "weight").write.parquet(s"$root/edges")
+    val srv = new CatalogServer(spark, cat)
+    try {
+      val sock = new Socket("127.0.0.1", srv.boundPort)
+      val in = new BufferedReader(
+        new InputStreamReader(sock.getInputStream, "UTF-8"))
+      val out = new PrintWriter(sock.getOutputStream, true)
+      out.println(s"CREATE g $root/edges")
+      assert(in.readLine().startsWith("OK"))
+      out.println("COMPUTE g page_rank")
+      val reply = in.readLine()
+      assertComputed(reply, "page_rank")
+      val Stats = (""".*"iterations":(\d+),"error":([^,]+),""" +
+        """"converged":(true|false),.*""").r
+      val Stats(iters, err, conv) = reply
+      val want = graft.algos.PageRank.run(cat.graph(spark, "g")).stats
+      assert(iters.toInt == want.iterations, reply)
+      assert(conv.toBoolean == want.converged, reply)
+      // float sums merge in task-completion order: equal to 12 digits
+      assert(math.abs(err.toDouble - want.error) <= 1e-12 * want.error,
+        s"$reply vs $want")
+      out.println("QUIT")
+      assert(in.readLine() == "OK bye")
+      sock.close()
+    } finally srv.close()
+  }
+
   test("repeated COMPUTEs do not pin caches; concurrent COMPUTEs are safe") {
     val s = spark
     import s.implicits._

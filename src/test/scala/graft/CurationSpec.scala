@@ -208,6 +208,22 @@ class CurationSpec extends SparkSpec {
     assert(out.sorted.sameElements(again.sorted))
   }
 
+  test("packSequences sizes a checkpointed input from its row count, " +
+      "not the partition cap") {
+    val docs = docsDF(800)
+    val cp = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(docs)
+    assert(graft.util.Parallelism.statsLess(cp))
+    withConf("spark.sql.shuffle.partitions", "32") {
+      // 800 rows is far below one 32 MB partition: the floor, not the cap
+      assert(Curation.packPartitions(cp) ==
+        graft.graph.LinkGraph.AdaptiveMinParts)
+      val bins = (df: org.apache.spark.sql.DataFrame) =>
+        Curation.packSequences(df, 128L).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(bins(cp) == bins(docs))
+    }
+  }
+
   test("packSequences: bins match a driver-side cumsum, are " +
       "partitioning-independent, and overflow only by the straddling doc") {
     val df = docsDF(800)

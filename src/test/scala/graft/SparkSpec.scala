@@ -18,6 +18,14 @@ trait SparkSpec extends AnyFunSuite {
     rows.toDF("src", "dst", "weight")
   }
 
+  /** Run `body` with one session conf set, restoring it afterwards. */
+  def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   def allClose(got: Map[Long, Double], expected: Seq[Double],
       tol: Double = 1e-6): Unit = {
     assert(got.size == expected.size,
